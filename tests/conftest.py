@@ -24,3 +24,32 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def waves(monkeypatch):
+    """Every Arrow wave job the Flight server starts: its partitions,
+    the FAIR pool it was submitted under, the thread that ran it and
+    the Arrow bytes it returned (counted as they are served)."""
+    import threading
+
+    from web3_flight_rpc_server_spark.serving import flight_server
+
+    calls = []
+    run_wave = flight_server._run_wave
+
+    def record(sc, jrdd, parts):
+        call = {"parts": list(parts),
+                "pool": sc.getLocalProperty("spark.scheduler.pool"),
+                "thread": threading.get_ident(), "bytes": 0}
+        calls.append(call)
+        frames = run_wave(sc, jrdd, parts)
+
+        def counted():
+            for frame in frames:
+                call["bytes"] += len(frame)
+                yield frame
+        return counted()
+
+    monkeypatch.setattr(flight_server, "_run_wave", record)
+    return calls

@@ -96,3 +96,44 @@ def test_unbounded_without_stream_source_fails_fast(spark, tmp_path):
             ).read_all()
     finally:
         srv.shutdown()
+
+
+def test_multi_wave_backfill_then_live_exactly_once(spark, tmp_path, waves,
+                                                    monkeypatch):
+    """A backfill too large for one wave (the budget is forced to one
+    partition per wave) streams wave by wave, never collected on the
+    driver in one piece, in block order, and the live rows still follow
+    it exactly once."""
+    from web3_flight_rpc_server_spark.serving import flight_server
+
+    monkeypatch.setattr(flight_server, "_wave_budget", lambda sc: 0)
+    parts = 3 * spark.sparkContext.defaultParallelism
+    rows = spark.range(0, 600, numPartitions=parts).selectExpr(
+        "'0xaaa' AS address", "'0x' AS data", "array('0xT1') AS topics",
+        "100 + id DIV 2 AS blockNumber", "concat('h', id) AS transactionHash",
+        "0 AS transactionIndex", "concat('b', id DIV 2) AS blockHash",
+        "CAST(id % 2 AS INT) AS logIndex", "false AS removed",
+    )
+    # nullable like the live leg's rows, which share the stream's schema
+    batch_logs = spark.createDataFrame(rows.rdd, LOGS_SCHEMA)
+    stream_dir = str(tmp_path / "rt")
+    _write(spark, stream_dir, [_log_row(999), _log_row(999, 1)])
+    srv = EngineFlightServer(
+        "grpc://0.0.0.0:0", spark, logs=batch_logs, stream_dir=stream_dir,
+        checkpoint_root=str(tmp_path / "ckpt"), realtime_max_batches=1,
+        realtime_poll_timeout_s=60.0,
+    )
+    try:
+        client = flight.FlightClient(f"grpc://localhost:{srv.port}")
+        got = client.do_get(flight.Ticket(
+            json.dumps({"dataset": "logs", "startBlock": 150}).encode()
+        )).read_all()
+    finally:
+        srv.shutdown()
+    keys = list(zip(got.column("blockNumber").to_pylist(),
+                    got.column("logIndex").to_pylist()))
+    backfill = [(b, i) for b in range(150, 400) for i in (0, 1)]
+    assert keys[:len(backfill)] == backfill
+    assert sorted(keys[len(backfill):]) == [(999, 0), (999, 1)]
+    assert len(waves) > 1
+    assert [p for w in waves for p in w["parts"]] == list(range(parts))

@@ -6,8 +6,8 @@ A thin pyarrow FlightServer over the engine: clients submit the SAME
 JSON ticket the reference accepts ({dataset, startBlock, endBlock,
 contractAddresses, topics}) and receive Arrow record batches; the
 notebook's `client.do_get(Ticket(json)).read_all()` flow works
-unchanged. Spark plans and executes; `DataFrame.toArrow()` hands the
-result over zero-copy on the driver.
+unchanged. Spark plans and executes; executors encode Arrow batches
+that the driver forwards without re-encoding.
 
 Parity notes:
 - get_flight_info echoes the descriptor command back as a
@@ -24,38 +24,136 @@ Parity notes:
   "sf_dir": ...} exposes the whole SURVEY §2 inventory over Flight —
   beyond-reference capability, same transport.
 
-Scale notes: a single do_get collects small results (aggregates,
-top-k) zero-copy via toArrow; above STREAM_THRESHOLD_ROWS the result
-is executor-written to a parquet spill and streamed batch-by-batch, so
-driver memory stays bounded even for scan-shaped query tickets. For
-scan-shaped BOUNDED tickets, get_flight_info additionally
-shards the block range into multiple endpoints, each carrying the same
-ticket narrowed to a sub-range (the reference's own maxBlockRange
-paging, lifted to the Flight metadata plane): clients pull shards in
-parallel and the driver only ever materializes one shard's worth of
-rows at a time. Range-sharding beats physical-partition tickets here
-because each shard re-enters Catalyst as a narrowed predicate —
-parquet row-group pruning applies per shard, and shards can be served
-by ANY server instance over the same storage (the endpoint carries the
-query, not a pointer into one JVM's cached RDD).
+Scale notes: every bounded, query and hybrid-backfill result leaves
+Spark as executor-encoded Arrow batches of at most
+``spark.sql.execution.arrow.maxRecordsPerBatch`` rows, in partition
+order (ORDER BY stays ordered), one job per wave of partitions sized
+to half of ``spark.driver.maxResultSize`` (``arrow_waves``): a result
+that fits is one job, a larger one never sits on the driver whole. The
+first wave runs inside do_get, so errors reach the client before any
+batch; later waves run as the client pulls. Wave jobs carry the
+handler's FAIR pool but no SQL execution id (nothing reads it: the
+Spark UI is off).
+Bounded scans can also shard: get_flight_info splits the block range
+into endpoints, each the ticket narrowed to a sub-range (the
+reference's maxBlockRange paging on the Flight metadata plane), pulled
+in parallel. Range-sharding beats physical-partition tickets because
+each shard re-enters Catalyst as a narrowed predicate (row-group
+pruning per shard) and any server over the same storage can serve it.
 """
 
 from __future__ import annotations
 
 import json
 import queue
-import shutil
-import tempfile
 import threading
 import uuid
+from typing import Callable, Iterator
 
 import pyarrow as pa
 import pyarrow.flight as flight
 
+from pyspark import SparkContext
+from pyspark.serializers import NoOpSerializer
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.util import _load_from_socket
 
 from ..plans.requests import ClientRequest, RequestMode, plan_request
-from ..sources import tables
+
+POOL = "spark.scheduler.pool"
+
+
+def arrow_schema(df: DataFrame) -> pa.Schema:
+    """The schema ``df.toArrow()`` returns, read off the plan without
+    running a Spark job (the same call DataFrame.toArrow makes)."""
+    return to_arrow_schema(
+        df.schema,
+        error_on_duplicated_field_names_in_struct=True,
+        prefers_large_types=df.sparkSession._jconf.arrowUseLargeVarTypes(),
+    )
+
+
+def _wave_budget(sc: SparkContext) -> int:
+    """Arrow bytes one wave may bring to the driver: half of
+    ``spark.driver.maxResultSize`` (0 there means unlimited)."""
+    conf = sc._jsc.sc().conf()
+    limit = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    return limit // 2 if limit else 1 << 62
+
+
+def _size_estimate(df: DataFrame) -> int:
+    """Arrow bytes ``df`` may come to: 4x Catalyst's size estimate, as
+    parquet inputs count compressed bytes (Arrow ran 3-4.5x on fixture
+    queries), capped at its inputs' because the size-only estimator
+    multiplies join sides (3.5e23 B on q_multi_join)."""
+    plan = df._jdf.queryExecution().optimizedPlan()
+    leaves = plan.collectLeaves()
+    inputs = sum(leaves.apply(i).stats().sizeInBytes()
+                 for i in range(leaves.size()))
+    return 4 * min(plan.stats().sizeInBytes(), inputs)
+
+
+def _run_wave(sc: SparkContext, jrdd, parts: list[int]) -> Iterator[bytes]:
+    """One Spark job over partitions ``parts`` of an Arrow batch RDD;
+    once it has run, its IPC frames stream off a local socket in order."""
+    sock_info = sc._jvm.PythonRDD.runJob(sc._jsc.sc(), jrdd, parts)
+    return _load_from_socket(sock_info, NoOpSerializer())
+
+
+def arrow_waves(df: DataFrame, cancelled: Callable[[], bool],
+                on_done: Callable[[], object] | None = None
+                ) -> Iterator[pa.RecordBatch]:
+    """``df``'s rows as Arrow record batches in partition order, one
+    Spark job per wave of consecutive partitions.
+
+    A wave takes as many partitions as fit ``_wave_budget``: the first
+    by ``_size_estimate``, each later one by the mean Arrow bytes per
+    partition of all waves before it, so a result that fits is one job
+    and a narrowed stream stays narrow. A low estimate or skewed
+    partitions can push a wave over the budget; up to 2x it still stays
+    under maxResultSize. The first wave runs before this returns, so
+    its errors raise here; later ones run as the iterator is pulled, in
+    the FAIR pool set at this call, and none once ``cancelled()``.
+    ``on_done`` runs once the stream ends, fails or is closed."""
+    sc = df.sparkSession.sparkContext
+    schema, pool = arrow_schema(df), sc.getLocalProperty(POOL)
+    budget, on_done = _wave_budget(sc), on_done or (lambda: None)
+
+    def fit(parts: int, nbytes: int) -> int:  # partitions, at least one
+        return max(1, int(budget * parts / max(nbytes, 1)))
+
+    def run(lo: int, hi: int) -> Iterator[bytes]:
+        sc.setLocalProperty(POOL, pool)
+        try:
+            return _run_wave(sc, jrdd, list(range(lo, hi)))
+        finally:
+            sc.setLocalProperty(POOL, None)
+
+    try:
+        jrdd = df._jdf.toArrowBatchRdd().toJavaRDD()
+        n = jrdd.getNumPartitions()
+        hi = min(n, fit(n, _size_estimate(df)))
+        frames = run(0, hi)
+    except BaseException:
+        on_done()
+        raise
+
+    def generate(hi: int, frames: Iterator[bytes]):
+        size = 0  # Arrow bytes of partitions [0, hi)
+        try:
+            while True:
+                for frame in frames:
+                    size += len(frame)
+                    yield pa.ipc.read_record_batch(pa.py_buffer(frame), schema)
+                if hi == n or cancelled():
+                    return
+                lo, hi = hi, min(n, hi + fit(hi, size))
+                frames = run(lo, hi)
+        finally:
+            on_done()
+
+    return generate(hi, frames)
 
 
 class EngineFlightServer(flight.FlightServerBase):
@@ -84,28 +182,20 @@ class EngineFlightServer(flight.FlightServerBase):
     # -- Flight surface -------------------------------------------------
     def do_get(self, context, ticket: flight.Ticket):
         # Each gRPC handler thread tags its Spark jobs with a private
-        # FAIR pool (pools materialize on demand): concurrent tickets
-        # then time-share the cluster round-robin instead of queueing
-        # behind an earlier large scan — the reference's
-        # one-virtual-thread-per-subscription concurrency model
-        # (Subscription.java) mapped onto Spark's scheduler. Local
-        # properties are per-thread (pinned-thread mode), so parallel
-        # handlers don't clobber each other; under a FIFO-mode session
-        # the tag is inert. The pool name is keyed by the handler
-        # thread, NOT a per-request uuid: Spark materializes on-demand
-        # pools into the scheduler's rootPool and never removes them,
-        # so uuid-named pools grow without bound on a busy server —
-        # per-thread names give identical fairness (local properties
-        # are per-thread anyway) with a pool count bounded by the gRPC
-        # thread pool size.
+        # FAIR pool, so concurrent tickets time-share the cluster instead
+        # of queueing behind an earlier large scan (the reference's
+        # one-virtual-thread-per-subscription model, Subscription.java).
+        # Local properties are per-thread; under a FIFO session the tag
+        # is inert. Pools are keyed by thread, not by request: Spark
+        # never removes on-demand pools, so their count stays bounded by
+        # the gRPC thread pool. Waves pulled after this returns re-set
+        # the pool themselves.
         sc = self._spark.sparkContext
-        sc.setLocalProperty(
-            "spark.scheduler.pool", f"flight-{threading.get_ident()}"
-        )
+        sc.setLocalProperty(POOL, f"flight-{threading.get_ident()}")
         try:
             return self._do_get(context, ticket)
         finally:
-            sc.setLocalProperty("spark.scheduler.pool", None)
+            sc.setLocalProperty(POOL, None)
 
     def _do_get(self, context, ticket: flight.Ticket):
         # map engine errors to FlightServerError uniformly so clients
@@ -120,84 +210,22 @@ class EngineFlightServer(flight.FlightServerBase):
             else:
                 req = ClientRequest.from_json(ticket.ticket)
                 if req.mode in (RequestMode.HYBRID, RequestMode.REALTIME):
-                    return self._serve_unbounded(req, obj)
+                    return self._serve_unbounded(context, req, obj)
                 df = plan_request(req, logs=self._logs, blocks=self._blocks)
         except ValueError as e:
             raise flight.FlightServerError(str(e))
-        # Small results (aggregates, top-k — the overwhelming ticket
-        # mix) collect zero-copy via toArrow. A scan-shaped result is
-        # probed first with a CollectLimit (Spark stops the job as soon
-        # as threshold+1 rows arrive, so the probe is cheap) and, when
-        # it overflows, streamed via a bounded spill instead of a full
-        # driver materialization. The persist() makes the probe-then-
-        # spill sequence a SINGLE execution even for agg/join-shaped
-        # results, where the CollectLimit sits above the shuffle and
-        # cannot stop early: the probe materializes the cached result,
-        # and the spill write reads the cache instead of re-running
-        # the query. Scan-shaped probes still stop early and cache
-        # only the partitions they touched.
-        df = df.persist()
-        try:
-            probe = df.limit(self.STREAM_THRESHOLD_ROWS + 1).toArrow()
-            stream = None
-            if probe.num_rows > self.STREAM_THRESHOLD_ROWS:
-                # serve with Spark's Arrow schema (the probe's), not
-                # the parquet footer's — round-tripped timestamp/
-                # nullability metadata can differ, and the client-
-                # visible schema must not flip with result size
-                stream = self._spill_stream(df, probe.schema)
-        finally:
-            df.unpersist()
-        if obj.get("dataset") == "query":
-            # long-lived host: drop any intermediates the dedup tiers
-            # persisted during this query (cache lifecycle contract).
-            # Safe before returning the spill stream: the spill write
-            # already executed the query; only file reads remain.
-            from ..operators.dedup import release_caches
+        # A query ticket drops its dedup intermediates once its stream
+        # ends or is cancelled, never while a later wave may read them.
+        # The ledger is process-global, so a concurrent query's release
+        # can still drop them mid-stream, and later waves then recompute
+        # them through lineage (ROADMAP direction D).
+        from ..operators.dedup import release_caches
 
-            release_caches()
-        return stream if stream is not None else flight.RecordBatchStream(probe)
+        done = release_caches if obj.get("dataset") == "query" else None
+        return flight.GeneratorStream(
+            arrow_schema(df), arrow_waves(df, context.is_cancelled, done))
 
-    STREAM_THRESHOLD_ROWS = 10_000
-    SPILL_BATCH_ROWS = 8_192
-
-    def _spill_stream(self, df: DataFrame,
-                      schema=None) -> flight.GeneratorStream:
-        """Serve a large result without materializing it on the driver:
-        the executors write the result to parquet in parallel (columnar,
-        JVM-side — no row-at-a-time Python conversion, unlike a
-        toLocalIterator loop), then the handler streams Arrow record
-        batches file-by-file, holding at most one SPILL_BATCH_ROWS
-        batch in driver memory. At cluster scale the spill dir lives on
-        shared storage, so any server instance can serve the batches —
-        the handoff carries files, not a pointer into one JVM's heap."""
-        import pyarrow.parquet as pq
-
-        spill_dir = tempfile.mkdtemp(prefix="flight_spill_")
-        df.write.mode("overwrite").parquet(spill_dir)
-        dataset = pq.ParquetDataset(spill_dir)
-        if schema is None:
-            schema = dataset.schema
-        # part-file names embed the partition index under one job UUID,
-        # so the lexical sort IS the partition order — ParquetDataset's
-        # own file order is documented as unspecified, and an ORDER
-        # BY'd result must not be reshuffled by the transport
-        files = sorted(dataset.files)
-
-        def generate():
-            try:
-                for fragment_path in files:
-                    pf = pq.ParquetFile(fragment_path)
-                    for batch in pf.iter_batches(
-                        batch_size=self.SPILL_BATCH_ROWS
-                    ):
-                        yield batch.cast(schema)
-            finally:
-                shutil.rmtree(spill_dir, ignore_errors=True)
-
-        return flight.GeneratorStream(schema, generate())
-
-    def _serve_unbounded(self, req: ClientRequest,
+    def _serve_unbounded(self, context, req: ClientRequest,
                          obj: dict | None = None) -> flight.GeneratorStream:
         """The reference's hybrid hand-off over one do_get: historical
         batches first, then live micro-batches as they arrive
@@ -221,7 +249,9 @@ class EngineFlightServer(flight.FlightServerBase):
         plan = plan_hybrid(
             req, self._logs, logs_stream(self._spark, self._stream_dir)
         )
-        schema = self._logs.limit(0).toArrow().schema
+        schema = arrow_schema(self._logs)
+        backfill = (() if plan.backfill is None
+                    else arrow_waves(plan.backfill, context.is_cancelled))
         batches: queue.Queue = queue.Queue()
 
         def sink(df: DataFrame, epoch: int) -> None:
@@ -230,9 +260,7 @@ class EngineFlightServer(flight.FlightServerBase):
                 batches.put(table)
 
         def generate():
-            if plan.backfill is not None:
-                for batch in plan.backfill.toArrow().to_batches():
-                    yield batch
+            yield from backfill
             if plan.tail is None:
                 return
             ckpt = f"{self._checkpoint_root}/{uuid.uuid4().hex}"
@@ -291,14 +319,12 @@ class EngineFlightServer(flight.FlightServerBase):
 
     def _sharded_info(self, descriptor: flight.FlightDescriptor, obj: dict,
                       req: ClientRequest) -> flight.FlightInfo:
-        """Bounded scans shard into per-sub-range endpoints so a large
-        result is never materialized on the driver in one piece: each
-        endpoint's do_get plans only its slice (predicate re-enters the
-        scan -> row-group pruning per shard). Endpoint locations are
-        empty = 'this server'; stats stay -1/-1 (unknown, as in the
-        reference)."""
+        """Bounded scans shard into per-sub-range endpoints that clients
+        pull in parallel: each endpoint's do_get plans only its slice
+        (row-group pruning per shard). Locations are empty = 'this
+        server'; stats stay -1/-1 (unknown, as in the reference)."""
         df = plan_request(req, logs=self._logs, blocks=self._blocks)
-        schema = df.limit(0).toArrow().schema
+        schema = arrow_schema(df)
         span = req.end_block - req.start_block + 1
         shard = int(obj.get("shardBlocks") or self.DEFAULT_SHARD_BLOCKS)
         n = max(1, min(self.MAX_ENDPOINTS, -(-span // shard)))
@@ -334,22 +360,3 @@ class EngineFlightServer(flight.FlightServerBase):
             raise flight.FlightServerError("no sf_dir configured")
         return registry[name].fn(self._spark, sf_dir)
 
-
-def serve_fixture_tables(spark: SparkSession, sf_dir: str,
-                         port: int = 0) -> EngineFlightServer:
-    """Convenience: serve the synthetic fixture tables with events
-    playing the logs role is NOT done here — the canonical logs/blocks
-    tables are expected as parquet under sf_dir when present; declared
-    queries are always served."""
-    logs = blocks = None
-    try:
-        logs = tables.load_table(spark, sf_dir, "logs")
-    except Exception:
-        pass
-    try:
-        blocks = tables.load_table(spark, sf_dir, "blocks")
-    except Exception:
-        pass
-    return EngineFlightServer(
-        f"grpc://0.0.0.0:{port}", spark, logs=logs, blocks=blocks, sf_dir=sf_dir
-    )
